@@ -27,19 +27,19 @@ def pytest_collection_modifyitems(config, items):
     ``tests_ok: false`` with zero failures).  Tests listed in
     ``tests/slow_tier.py`` (everything >= 7 s in the r13 duration
     census, minus one kept representative per file) skip unless
-    ``V6SPARK_SLOW=1``.  The default suite stays the fast regression
-    net (~15 min); the round-end discipline runs the full suite with
-    the env var set."""
+    ``V6SPARK_SLOW=1``.  IDs are matched repo-relative, so a run
+    started from ``tests/`` gates the same tests.  The default suite
+    stays the fast regression net (~15 min); the round-end discipline
+    runs the full suite with the env var set."""
     if os.environ.get("V6SPARK_SLOW") == "1":
         return
-    from tests.slow_tier import SLOW_TESTS
+    from tests.slow_tier import SLOW_TESTS, repo_nodeid
 
     skip = pytest.mark.skip(
         reason="slow tier: set V6SPARK_SLOW=1 to run (tests/slow_tier.py)"
     )
     for item in items:
-        nodeid = item.nodeid.replace("::()::", "::")
-        if nodeid in SLOW_TESTS:
+        if repo_nodeid(item.path, item.nodeid) in SLOW_TESTS:
             item.add_marker(skip)
 
 

@@ -29,16 +29,19 @@ def test_dedup_exact_prefix_key(docs):
 
 
 def test_shingles(spark):
-    df = spark.createDataFrame([("a b c d",)], "text string")
-    row = df.select(dedup.shingles_col("text", 3).alias("s")).collect()[0]
-    assert row["s"] == ["a b c", "b c d"]
+    df = spark.createDataFrame([("a b c d",), ("a b",)], "text string")
+    got = [
+        r["s"]
+        for r in df.select(F.expr(dedup._shingles_sql("text", 3)).alias("s"))
+        .collect()
+    ]
+    # short documents yield their single full-token shingle
+    assert got == [["a b c", "b c d"], ["a b"]]
 
 
 def test_minhash_identical_and_near(docs):
-    sig = docs.select(
-        "doc_id", dedup.minhash_signature("text", n_hashes=32).alias("sig")
-    )
-    got = {r["doc_id"]: r["sig"] for r in sig.collect()}
+    sig = dedup.minhash_signature_frame(docs, n_hashes=32)
+    got = {r["_id"]: r["_sig"] for r in sig.collect()}
     assert got[1] == got[4]  # identical text -> identical signature
     same_near = sum(a == b for a, b in zip(got[1], got[2]))
     same_far = sum(a == b for a, b in zip(got[1], got[3]))
@@ -46,7 +49,9 @@ def test_minhash_identical_and_near(docs):
 
 
 def test_lsh_candidates_find_near_dup(docs):
-    cands = dedup.minhash_lsh_candidates(docs, n_hashes=32, bands=16)
+    cands = dedup.near_dup_report(
+        docs, n_hashes=32, bands=16, include_edit=False
+    )
     pairs = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in cands.collect()}
     assert (1, 4) in pairs and pairs[(1, 4)] == 1.0
     assert (1, 2) in pairs and pairs[(1, 2)] > 0.5
@@ -62,9 +67,9 @@ def test_lsh_bucket_guard_degenerate_corpus(spark):
     degenerate = spark.createDataFrame(
         [(i, DOC_A) for i in range(n)], "doc_id long, text string"
     )
-    guarded = dedup.minhash_lsh_candidates(
-        degenerate, n_hashes=16, bands=4, persist_signatures=False,
-        max_bucket_size=50,
+    guarded = dedup.near_dup_report(
+        degenerate, n_hashes=16, bands=4, max_bucket_size=50,
+        include_est=False, include_edit=False,
     )
     assert guarded.count() == 0  # all buckets oversized -> routed away
     # and a mixed corpus keeps its small-bucket pairs
@@ -72,31 +77,66 @@ def test_lsh_bucket_guard_degenerate_corpus(spark):
         [(i, DOC_A) for i in range(60)] + [(100, DOC_B), (101, DOC_B)],
         "doc_id long, text string",
     )
-    pairs = dedup.minhash_lsh_candidates(
-        mixed, n_hashes=16, bands=4, persist_signatures=False,
-        max_bucket_size=50,
+    pairs = dedup.near_dup_report(
+        mixed, n_hashes=16, bands=4, max_bucket_size=50,
+        include_est=False, include_edit=False,
     )
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert got == {(100, 101)}
 
 
-def test_ngram_jaccard_exact(spark, docs):
-    cands = spark.createDataFrame([(1, 2), (1, 3)], "id_a long, id_b long")
-    out = dedup.ngram_jaccard_pairs(docs, cands, k=3)
+def test_ngram_jaccard_exact(docs):
+    out = dedup.near_dup_report(
+        docs, n_hashes=32, bands=16, include_est=False, include_edit=False
+    )
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}
     # 14 tokens -> 12 shingles each; docs 1/2 differ only in the last
     # token, so exactly one shingle differs: |inter|=11, |union|=13
     assert got[(1, 2)] == pytest.approx(11 / 13, abs=1e-6)
-    assert got[(1, 3)] == 0.0
+    assert got[(1, 4)] == 1.0
+    assert (1, 3) not in got  # no shared band: never verified
 
 
-def test_simhash(docs):
-    out = dedup.simhash_signature(docs)
-    got = {r["doc_id"]: r["simhash"] for r in out.collect()}
-    assert got[1] == got[4]
-    ham_near = bin((got[1] ^ got[2]) & ((1 << 64) - 1)).count("1")
-    ham_far = bin((got[1] ^ got[3]) & ((1 << 64) - 1)).count("1")
-    assert ham_near < ham_far
+def test_near_dup_report_rejects_unknown_engine(docs):
+    with pytest.raises(ValueError, match="unknown minhash engine"):
+        dedup.near_dup_report(docs, engine="Catalyst")
+
+
+def test_near_dup_report_signature_cache_bounded(spark):
+    """Each call persists its signature frame; a long-lived session
+    must hold at most one of them per thread, not one per call."""
+    jsc = spark.sparkContext._jsc.sc()
+    spark.catalog.clearCache()
+    base = len(jsc.getRDDStorageInfo())
+    for i in range(5):
+        df = spark.createDataFrame(
+            [(1, f"{DOC_A} v{i}"), (2, f"{DOC_A2} v{i}"), (3, DOC_B)],
+            "doc_id long, text string",
+        )
+        got = dedup.near_dup_report(df, n_hashes=32, bands=16).collect()
+        assert {(r["id_a"], r["id_b"]) for r in got} == {(1, 2)}
+    assert len(jsc.getRDDStorageInfo()) <= base + 1
+    # a repeat call on the same input re-registers its entry rather
+    # than evicting it
+    dedup.near_dup_report(df, n_hashes=32, bands=16).collect()
+    assert len(jsc.getRDDStorageInfo()) == base + 1
+
+
+def test_near_dup_report_skips_stopped_sessions_signatures(docs):
+    """The frame a thread persisted under a session that has since
+    stopped is not unpersisted: that would raise."""
+    from types import SimpleNamespace
+
+    def unpersist():
+        raise AssertionError("unpersisted a stopped session's frame")
+
+    stale = SimpleNamespace(
+        sparkSession=SimpleNamespace(sparkContext=object()),
+        unpersist=unpersist,
+    )
+    dedup._ndr_thread.sig = stale
+    out = dedup.near_dup_report(docs, n_hashes=32, bands=16)
+    assert {(r["id_a"], r["id_b"]) for r in out.collect()} >= {(1, 2), (1, 4)}
 
 
 def test_simhash_portable_engines_agree(spark):
@@ -514,20 +554,28 @@ def test_zero_norm_vector_never_tops_topk(spark):
     assert pairs[(1, 2)] is None  # degenerate pair: NULL, not NaN
 
 
+def _py_shingles(text, k=3):
+    toks = [t for t in text.lower().split() if t]
+    return {" ".join(toks[i : i + k]) for i in range(max(len(toks) - k + 1, 1))}
+
+
 def test_near_dup_report_matches_composed_ops(docs):
-    """The fused one-scan pipeline returns exactly what composing
-    minhash_lsh_candidates + ngram_jaccard_pairs + levenshtein does."""
+    """The fused one-scan pipeline returns exactly the pairs that share
+    a band of the judged signature kernel, each with its signature
+    agreement and the exact Jaccard and edit distance recomputed in
+    Python."""
+    n_hashes, bands = 32, 8
+    rpb = n_hashes // bands
     fused = {
         (r["id_a"], r["id_b"]): (r["est_jaccard"], r["jaccard"], r["edit_dist"])
-        for r in dedup.near_dup_report(docs, n_hashes=32, bands=8).collect()
+        for r in dedup.near_dup_report(
+            docs, n_hashes=n_hashes, bands=bands
+        ).collect()
     }
-    cands = dedup.minhash_lsh_candidates(
-        docs, n_hashes=32, bands=8, persist_signatures=False
-    )
-    jac = dedup.ngram_jaccard_pairs(docs, cands.select("id_a", "id_b"))
-    composed = {}
-    est = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in cands.collect()}
-    jacc = {(r["id_a"], r["id_b"]): r["jaccard"] for r in jac.collect()}
+    sigs = {
+        r["_id"]: r["_sig"]
+        for r in dedup.minhash_signature_frame(docs, n_hashes=n_hashes).collect()
+    }
     texts = {r["doc_id"]: r["text"] for r in docs.collect()}
 
     def lev(a, b):
@@ -544,8 +592,18 @@ def test_near_dup_report_matches_composed_ops(docs):
             prev = cur
         return prev[n]
 
-    for k in est:
-        composed[k] = (est[k], jacc[k], lev(texts[k[0]], texts[k[1]]))
+    composed = {}
+    for a in sigs:
+        for b in sigs:
+            sa, sb = sigs[a], sigs[b]
+            if a < b and any(
+                sa[i : i + rpb] == sb[i : i + rpb]
+                for i in range(0, n_hashes, rpb)
+            ):
+                est = round(sum(x == y for x, y in zip(sa, sb)) / n_hashes, 6)
+                ta, tb = _py_shingles(texts[a]), _py_shingles(texts[b])
+                jac = round(len(ta & tb) / len(ta | tb), 6)
+                composed[(a, b)] = (est, jac, lev(texts[a], texts[b]))
     assert fused == composed
     assert fused, "expected near-dup candidates in the fixture corpus"
 
@@ -626,18 +684,16 @@ def test_connected_keepers_hybrid_paths_agree(spark):
 
 
 def test_minhash_engines_agree(spark, sf_dir):
-    """The Arrow signature kernel is BIT-identical to the Catalyst
-    portable form over the whole corpus — the regression lock that
+    """The Arrow signature kernel is BIT-identical to the judged
+    codegen aggregate over the whole corpus — the regression lock that
     lets the fast engine be the library default while the judged
     query keeps the all-SQL lineage."""
     from v6spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     a = {
-        r["doc_id"]: tuple(r["s"])
-        for r in docs.select(
-            "doc_id", dedup.minhash_signature("text", 64, 3).alias("s")
-        ).collect()
+        r["_id"]: tuple(r["_sig"])
+        for r in dedup.minhash_signature_frame(docs, n_hashes=64).collect()
     }
     b = {
         r["doc_id"]: tuple(r["s"])

@@ -39,7 +39,7 @@ def _assert_parity(op_df, judged_df, name):
     assert left == right, (
         f"{name}: operator result diverged from judged SQL twin "
         f"({len(left)} vs {len(right)} rows; first diff: "
-        f"{next((a, b) for a, b in zip(left, right) if a != b) if left and right else 'row count'})"
+        f"{next(((a, b) for a, b in zip(left, right) if a != b), 'row count')})"
     )
 
 

@@ -87,14 +87,14 @@ def test_no_python_in_declared_plans(name, spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_simhash_library_python_is_arrow_batched(spark, sf_dir):
-    # the judged q_dedup_simhash is now pure Catalyst (portable hash);
-    # the library fast-path variant keeps the one Python stage in the
-    # operator surface, and it must be vectorized, never row-at-a-time
-    from v6spark.operators.dedup import simhash_signature
+def test_minhash_library_python_is_arrow_batched(spark, sf_dir):
+    # the judged q_dedup_minhash is pure Catalyst; the library default
+    # signature engine is the one Python stage in the near-dup surface,
+    # and it must be vectorized, never row-at-a-time
+    from v6spark.operators.dedup import near_dup_report
     from v6spark.sources.tables import load_table
 
-    df = simhash_signature(load_table(spark, sf_dir, "documents"))
+    df = near_dup_report(load_table(spark, sf_dir, "documents"))
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )

@@ -200,9 +200,9 @@ def test_split_leakage_report(spark):
         split_weights={"train": 0.5, "test": 0.5},
     )
     survivors = out.select("doc_id", "split")
-    sig = dedup.minhash_lsh_candidates(
+    sig = dedup.near_dup_report(
         docs.join(survivors.select("doc_id"), "doc_id", "left_semi"),
-        n_hashes=32, bands=8, persist_signatures=False,
+        n_hashes=32, bands=8, include_edit=False,
     ).filter(F.col("est_jaccard") >= 0.5)
     leaks = split_leakage_report(survivors, sig.select("id_a", "id_b"))
     assert leaks.count() == 0

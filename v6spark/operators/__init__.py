@@ -8,9 +8,11 @@ Module map to the reference inventory (SURVEY.md §2.1):
 - ``transforms``  row-wise transforms B3-B6 (masking, recode, subsetting)
 - ``asof``        as-of join (extension; union+window, single shuffle)
 - ``sessionize``  gaps-and-islands sessionization (extension)
-- ``dedup``       exact + MinHash-LSH + SimHash (signatures, Hamming-ball
-                  pairs within/between sets) + n-gram Jaccard + keeper
-                  clustering + guarded end-to-end near_dup_keepers
+- ``dedup``       exact + MinHash-LSH (one codegen signature kernel, an
+                  Arrow engine of it; near_dup_report verifies pairs by
+                  n-gram Jaccard + edit distance) + SimHash (portable
+                  signatures, Hamming-ball pairs within/between sets) +
+                  keeper clustering + guarded end-to-end near_dup_keepers
 - ``similarity``  cosine top-k (brute force + multi-probe LSH ANN),
                   LSH/IVF pair generation, k-means coarse quantizer
 - ``text``        language-ID, quality scoring, Gopher rules, TF-IDF/

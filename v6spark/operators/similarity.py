@@ -186,11 +186,10 @@ def ann_lsh_pairs(
     entry lives until Spark's LRU evicts it or the session stops —
     for repeated calls in a long-lived session pass
     ``persist_buckets=False`` or unpersist via
-    ``spark.catalog.clearCache()``.  (Same lifecycle as
-    dedup.minhash_lsh_candidates' signature cache.)
+    ``spark.catalog.clearCache()``.
 
     ``max_bucket_size`` is the same 100 TB robustness guard as in
-    ``dedup.minhash_lsh_candidates``: the within-bucket join is
+    ``dedup.near_dup_report``: the within-bucket join is
     quadratic in bucket population, and a production embedding corpus
     has degenerate near-identical clusters (re-encoded duplicates,
     zero vectors) that flood one bucket.  Oversized buckets are

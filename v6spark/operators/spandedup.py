@@ -47,7 +47,7 @@ def _gram_positions(
     """(doc_id, pos, gram_hash) — one row per n-gram occurrence.
 
     The token array is LET-BOUND via a single-element ``transform``
-    (the ``dedup.shingles_col`` trick) so the text splits ONCE per
+    (the ``dedup._shingles_sql`` trick) so the text splits ONCE per
     row — referencing the tokenizer inside the window lambda would
     re-split per window, O(tokens^2)/doc (~10x measured there).
     """

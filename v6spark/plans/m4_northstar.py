@@ -5,8 +5,8 @@ similarity search (brute-force + LSH-bucketed ANN), language-ID,
 quality scoring, and the batch analogs of the streaming event
 windows.  Every query here is oracle-backed: the near-dup/ANN family
 uses PORTABLE md5-based hashing and plan-time literal hyperplanes so
-a DuckDB oracle reproduces the exact values (the xxhash64/Arrow-UDF
-variants remain as library fast paths, unit-tested).
+a DuckDB oracle reproduces the exact values (the bit-identical Arrow
+MinHash kernel remains as the library fast path, unit-tested).
 
 r12: trailing presentation ORDER BYs removed — see m1_core docstring.
 q_text_tokens' sort feeds its LIMIT 25 (semantic) and stays, as does
@@ -345,11 +345,15 @@ _M31 = (1 << 31) - 1
 
 
 def _minhash_oracle(n_hashes: int = 64, bands: int = 16) -> str:
+    """Linear in the corpus: the distinct shingle hashes of each
+    document meet a ``VALUES`` table of the affine permutations, the
+    signature is ``min`` per (doc, permutation), and candidates are an
+    equi-join on (band, band slice) — never all pairs of documents."""
     from v6spark.operators.dedup import _perm_params
 
-    params = _perm_params(n_hashes)
-    arr_a = "[" + ",".join(str(a) for a, _ in params) + "]"
-    arr_b = "[" + ",".join(str(b) for _, b in params) + "]"
+    perms = ", ".join(
+        f"({i}, {a}, {b})" for i, (a, b) in enumerate(_perm_params(n_hashes), 1)
+    )
     rpb = n_hashes // bands
     h = _O_H60.format(x="s")
     return f"""
@@ -360,36 +364,38 @@ def _minhash_oracle(n_hashes: int = 64, bands: int = 16) -> str:
              list_transform(generate_series(1, greatest(len(toks) - 2, 1)),
                             i -> array_to_string(toks[i:i+2], ' ')) AS shingles
       FROM t),
-    hs AS (
-      SELECT doc_id, text, shingles,
-             list_transform(shingles, s -> {h} % {_M31}) AS hv
-      FROM sh),
+    hv AS (
+      SELECT DISTINCT doc_id, {h} % {_M31} AS h
+      FROM (SELECT doc_id, unnest(shingles) AS s FROM sh)),
+    perm(i, a, b) AS (VALUES {perms}),
+    mins AS (
+      SELECT doc_id, i, min((h * a + b) % {_M31}) AS m
+      FROM hv, perm GROUP BY doc_id, i),
     sig AS (
-      SELECT doc_id, text, shingles,
-             list_transform(generate_series(1, {n_hashes}),
-                            i -> list_min(list_transform(hv,
-                                 h -> (h * ({arr_a})[i] + ({arr_b})[i]) % {_M31}))) AS sg
-      FROM hs),
+      SELECT doc_id, list(m ORDER BY i) AS sg FROM mins GROUP BY doc_id),
+    banded AS (
+      SELECT doc_id, bnd, sg[bnd*{rpb}+1:bnd*{rpb}+{rpb}] AS slc
+      FROM sig, range(0, {bands}) r(bnd)),
     cand AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM sig a, sig b, range(0, {bands}) r(bnd)
-      WHERE a.doc_id < b.doc_id
-        AND a.sg[bnd*{rpb}+1:bnd*{rpb}+{rpb}] = b.sg[bnd*{rpb}+1:bnd*{rpb}+{rpb}]
-      GROUP BY 1, 2)
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM banded a JOIN banded b
+        ON a.bnd = b.bnd AND a.slc = b.slc AND a.doc_id < b.doc_id)
     SELECT c.id_a, c.id_b,
            round(CAST(len(list_filter(generate_series(1, {n_hashes}),
                                       i -> a.sg[i] = b.sg[i])) AS DOUBLE)
                  / {n_hashes}.0, 6) AS est_jaccard,
-           round(CAST(len(list_intersect(list_distinct(a.shingles),
-                                         list_distinct(b.shingles))) AS DOUBLE)
-                 / CAST(len(list_distinct(a.shingles)) + len(list_distinct(b.shingles))
-                        - len(list_intersect(list_distinct(a.shingles),
-                                             list_distinct(b.shingles))) AS DOUBLE),
+           round(CAST(len(list_intersect(list_distinct(da.shingles),
+                                         list_distinct(db.shingles))) AS DOUBLE)
+                 / CAST(len(list_distinct(da.shingles)) + len(list_distinct(db.shingles))
+                        - len(list_intersect(list_distinct(da.shingles),
+                                             list_distinct(db.shingles))) AS DOUBLE),
                  6) AS jaccard,
-           CAST(levenshtein(a.text, b.text) AS INT) AS edit_dist
+           CAST(levenshtein(da.text, db.text) AS INT) AS edit_dist
     FROM cand c
     JOIN sig a ON a.doc_id = c.id_a
     JOIN sig b ON b.doc_id = c.id_b
+    JOIN sh da ON da.doc_id = c.id_a
+    JOIN sh db ON db.doc_id = c.id_b
     ORDER BY c.id_a, c.id_b
     """
 
@@ -410,8 +416,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle restates the identical integer arithmetic in SQL —
     ``engine="catalyst"`` keeps this judged plan's whole lineage
     SQL-reproducible and Python-free (the library default is the
-    bit-identical Arrow signature kernel, ~10x; see
-    ``minhash_signature_arrow``).
+    bit-identical Arrow signature kernel: 4.0-5.7 s against 5.6-9.6 s
+    for the aggregate's signatures of 100k documents on a 4-vCPU host;
+    see ``minhash_signature_arrow``).
     """
     docs = spread_small_input(load_table(spark, sf_dir, "documents"))
     return near_dup_report(

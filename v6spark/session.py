@@ -100,11 +100,13 @@ def get_spark(app_name: str = "v6spark", cpus: int | None = None) -> SparkSessio
 def clear_engine_caches(spark: SparkSession) -> None:
     """Drop every cached frame the engine's operators persisted.
 
-    ``minhash_lsh_candidates`` / ``near_dup_report`` /
-    ``ann_lsh_pairs`` persist their signature/bucket side frames
-    (each feeds multiple lineages); Spark's cache is keyed by
-    analyzed plan, so in a long-lived session repeated calls reuse —
-    and accumulate — those entries until the LRU evicts them.  Call
-    this between unrelated workloads for a deterministic clean slate.
+    ``near_dup_report``, ``near_dup_keepers`` and ``ann_lsh_pairs``
+    persist their signature/bucket side frames (each feeds multiple
+    lineages).  ``near_dup_report`` keeps at most one signature frame
+    per thread (each call unpersists its thread's previous one); the
+    others' entries are keyed by analyzed plan, so in a long-lived
+    session repeated calls reuse — and accumulate — them until the LRU
+    evicts them.  Call this between unrelated workloads for a
+    deterministic clean slate.
     """
     spark.catalog.clearCache()
